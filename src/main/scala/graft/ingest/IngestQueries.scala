@@ -689,12 +689,302 @@ object IngestQueries {
     * certificate leg, so the maintained aggregate and its oracle twin
     * cannot drift from the recomputed one.
     */
-  private def productContrib(contents: DataFrame): DataFrame =
-    contents.select(col("product_id"), lit(1L).as("n_rows"),
+  private def productContrib(slices: Seq[DataFrame]): DataFrame =
+    slices.head.select(col("product_id"), lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("amount_cents"))
 
-  private[graft] def productReport(contents: DataFrame): DataFrame =
-    productShape.report(contents)
+  /** One change feed of a maintained report: `watermark` names the
+    * report column that stamps the version of this source the report
+    * reflects (the resume point, read back off the durable rows — one
+    * per source, the offset-log discipline of Structured Streaming's
+    * recovery), and `pruneCols` the columns a change to this source is
+    * pruned on: the changed-key frame a step projects off this
+    * source's CDC, semi-joined against EVERY source slice of that step
+    * (so all of a shape's sources carry these columns).
+    */
+  private[graft] final case class Source(watermark: String, pruneCols: Seq[String])
+
+  /** A maintained SUM-shaped report family as ONE object: the
+    * aggregate definition, its grouping/measure columns, its change
+    * feeds, and — derived, never hand-written — the durable
+    * report-store schema (group columns as strings unless `groupTypes`
+    * declares otherwise, measures as longs, plus one watermark column
+    * per source). Bundling them means a consumer ([[reportStoreHandle]]
+    * / [[maintain]]) can never pair one family's fold with another's
+    * declared schema. Instances: [[productShape]] (q164–q168's
+    * per-product report), [[categoryShape]] (q169/q170's level-1
+    * per-(group, product) report; q171's second consumer),
+    * [[joinedShape]] (q175/q177's joined per-category report — the one
+    * two-source shape), and [[monthlyShape]] (q176's time-bucketed
+    * report — its DERIVED integer group keys are why `groupTypes`
+    * exists).
+    */
+  private[graft] final case class MaintainedShape(
+      /** Per-row measure contributions: maps the source slices (one per
+        * [[sources]] entry, in order — a multi-source shape also says
+        * here how its slices combine, e.g. [[joinedView]]) to
+        * `groupCols ++ measureCols` rows whose measures are exact LONG
+        * per-row contributions (counts as `lit(1L)`) — [[report]] is
+        * DERIVED from it (group-by + SUM), so the aggregate a consumer
+        * materializes and the fold's ± arms can never drift.
+        */
+      contrib: Seq[DataFrame] => DataFrame,
+      groupCols: Seq[String], measureCols: Seq[String],
+      groupTypes: Seq[org.apache.spark.sql.types.DataType] = Nil,
+      /** The change feeds in walk order; a single-source shape folds
+        * the orders store, pruned on its key.
+        */
+      sources: Seq[Source] = Seq(Source("as_of", graft.core.Schemas.ordersKey))) {
+    require(groupTypes.isEmpty || groupTypes.size == groupCols.size,
+      "groupTypes must be empty (all strings) or one per group column")
+    private def sums = measureCols.map(c => sum(col(c)).as(c))
+    /** The full aggregate over the source slices — the recompute legs'
+      * and base materializations' shape: one group-by exchange over the
+      * per-row contributions (SUM of `lit(1L)` replaces COUNT — same
+      * long values, and the shared definition is what makes the fused
+      * fold provably the same aggregate).
+      */
+    def report(slices: DataFrame*): DataFrame =
+      contrib(slices).groupBy(groupCols.map(col): _*).agg(sums.head, sums.tail: _*)
+
+    /** The generic ± fold behind EVERY maintained aggregate: apply the
+      * delta of one change step to `base`, the materialized report for
+      * the `before` slices. Both arms read their slices semi-joined to
+      * `keys` (on the key frame's own columns), so a step's cost tracks
+      * the CHANGE volume, not the store size; the fold unions the
+      * ±1-SIGNED per-row contributions of both arms onto `base` and
+      * aggregates ONCE. Equivalent to `report(after ⋉ keys) ⊖
+      * report(before ⋉ keys)` by distributivity of SUM over exact
+      * longs (every measure is an integer contribution — counts are
+      * `lit(1L)`, cents/quantities are floored/cast longs BEFORE
+      * summing), but pays ONE aggregation exchange instead of three
+      * (guide §2.3/§2.4): the final group-by's partial (map-side)
+      * aggregation collapses each arm to group grain before the
+      * shuffle anyway.
+      *
+      * Correct for ALL three change kinds — inserts and updates land
+      * via the `after ⊖ before` arms over the changed keys, and a
+      * DELETED key's rows appear only in the before arm, retracting
+      * its contribution; a group whose rows ALL retracted leaves a zero
+      * shell, filtered here (SUM/COUNT are self-maintainable; MIN/MAX
+      * needs the per-group recompute fallback — q169's
+      * [[maintainTopSellers]]). Group MOVES are absorbed for free: an
+      * LWW update that rewrites a group column retracts the key's rows
+      * from the old group via the before arm and adds them to the new
+      * one via the after arm.
+      *
+      * PRECONDITION on the change feed: `keys` must cover every key
+      * whose row MULTISET differs between the versions.
+      * [[graft.state.StateTable.diff]] is key-level (latest row per
+      * key), so a transition that added or removed value-identical
+      * COPIES of an existing key would slip past it — but transitions
+      * produced by [[graft.state.StateTable.upsert]] can never do that:
+      * the LWW arm rewrites an existing key's latest row IN PLACE and
+      * the insert arm appends only UNSEEN keys, so an existing key's
+      * multiplicity is invariant across an upsert, and any multiset
+      * change at an existing key shows up in its latest row's values
+      * (IngestCertSpec pins this invariant on the judged flow's own
+      * version pair). Feeding this fold from a store mutated by raw
+      * `overwrite` (multiset edits invisible at key level) needs a
+      * multiset-aware change feed instead — e.g. also diffing per-key
+      * row counts between the versions — unless the edit removes or
+      * rewrites WHOLE keys (q170/q172's purges).
+      */
+    def fold(base: DataFrame, before: Seq[DataFrame], after: Seq[DataFrame],
+        keys: DataFrame): DataFrame = {
+      def arm(slices: Seq[DataFrame], sign: Long) =
+        contrib(slices.map(_.join(keys, keys.columns.toSeq, "left_semi")))
+          .select(groupCols.map(col) ++
+            measureCols.map(c => (col(c) * lit(sign)).as(c)): _*)
+      base
+        .unionByName(arm(after, 1L)).unionByName(arm(before, -1L))
+        .groupBy(groupCols.map(col): _*)
+        .agg(sums.head, sums.tail: _*)
+        .filter(col("n_rows") > 0)
+    }
+
+    def schema: org.apache.spark.sql.types.StructType = {
+      val types =
+        if (groupTypes.isEmpty)
+          groupCols.map(_ => org.apache.spark.sql.types.StringType)
+        else groupTypes
+      org.apache.spark.sql.types.StructType(
+        groupCols.zip(types).map { case (c, t) =>
+          org.apache.spark.sql.types.StructField(c, t) } ++
+        measureCols.map(c => org.apache.spark.sql.types.StructField(c,
+          org.apache.spark.sql.types.LongType)) ++
+        sources.map(src => org.apache.spark.sql.types.StructField(
+          src.watermark, org.apache.spark.sql.types.StringType)))
+    }
+  }
+
+  private[graft] val productShape: MaintainedShape =
+    MaintainedShape(productContrib, Seq("product_id"),
+      Seq("n_rows", "amount_cents"))
+
+  /** Where a maintained report lives between the steps of [[maintain]]:
+    * the watermark vector its progress is recorded at (None before any
+    * progress), the report the next step folds onto, and the commit
+    * of a folded step. [[DurableReport]] keeps it in a report store,
+    * [[CarriedReport]] in memory.
+    */
+  private[graft] sealed trait ReportState {
+    val shape: MaintainedShape
+    /** The vector a report with no recorded progress starts from,
+      * given every source's retained history (oldest first).
+      */
+    def start(histories: Seq[Seq[String]]): Seq[String]
+    def watermarks(): Option[Seq[String]]
+    /** The report's current rows, without watermark columns. */
+    def report(): DataFrame
+    /** Take `base`, the report of the start slices, as the report at
+      * `start`; `anyEmpty` says whether a start slice has no rows.
+      */
+    def bootstrap(base: DataFrame, start: Seq[String], anyEmpty: => Boolean): Unit
+    def commit(report: DataFrame, wm: Seq[String]): Unit
+    /** The changed-key frame as one step's two arms read it. */
+    def keys(changed: DataFrame): DataFrame
+  }
+
+  /** A durable report: the report table `st` ([[reportStoreHandle]])
+    * holds the rows plus one watermark column per source, constant
+    * across a version's rows (every commit stamps the vector it
+    * reflects), so one single-row aggregate recovers the vector with
+    * no sidecar metadata file; version strings sort by their monotonic
+    * nano-timestamp prefix, so max IS the latest. An un-started
+    * consumer starts at the OLDEST retained version of every source,
+    * and writes its base only when every start slice carries rows:
+    * otherwise the base is empty (a single source trivially; an inner
+    * join by its algebra) and the report store's empty CreateTable
+    * version already holds it — the judged flows whose oldest versions
+    * ARE empty CreateTables keep their report-version counts.
+    * Each commit writes one report version — the durable write IS the
+    * step's lineage truncation, so the changed-key frame rides
+    * UNPINNED into it: an eager pin only added one extra sequential
+    * job round-trip per fold (the family's cost is job COUNT, not
+    * volume — §1.2/§2.4). The diff subtree appears in both ± arms, but
+    * it is deterministic (max_by over the unique-per-row _seq) and its
+    * exchanges are reused within the single write job where the
+    * planner proves the subtrees identical — measured on q167/q168:
+    * one job fewer per fold, same fold output. Versioned immutability
+    * makes the read-while-write safe: each step's base is read from
+    * the CURRENT version dir while the next version writes to a fresh
+    * dir.
+    */
+  private[graft] final class DurableReport(st: graft.state.StateTable,
+      val shape: MaintainedShape) extends ReportState {
+    private val wmCols = shape.sources.map(_.watermark)
+    def start(histories: Seq[Seq[String]]): Seq[String] = histories.map(_.head)
+    def watermarks(): Option[Seq[String]] = {
+      val maxes = wmCols.map(c => max(col(c)))
+      val r = st.current().get.agg(maxes.head, maxes.tail: _*).head()
+      if (r.isNullAt(0)) None else Some(wmCols.indices.map(r.getString))
+    }
+    def report(): DataFrame = st.current().get.drop(wmCols: _*)
+    def bootstrap(base: DataFrame, start: Seq[String], anyEmpty: => Boolean): Unit =
+      if (!anyEmpty) commit(base, start)
+    def commit(report: DataFrame, wm: Seq[String]): Unit =
+      st.overwrite(wmCols.zip(wm).foldLeft(report) { case (df, (c, v)) =>
+        df.withColumn(c, lit(v)) })
+    def keys(changed: DataFrame): DataFrame = changed
+  }
+
+  /** A carried report: the rows live in memory, starting at the
+    * vector `startAt` picks with the (unpinned) report of its slices as
+    * the base. Each commit and each step's changed-key frame is pinned
+    * (Checkpoints.pin): the maintained artifact must
+    * not accrete lineage across steps — at production step counts an
+    * unpinned fold's plan depth grows per micro-batch (the
+    * iterative-operator rule, `core/Checkpoints.scala`). The pinned key
+    * frames are kept, one per applied step, for the guards.
+    */
+  private[graft] final class CarriedReport(val shape: MaintainedShape,
+      startAt: Seq[Seq[String]] => Seq[String]) extends ReportState {
+    private var wm: Option[Seq[String]] = None
+    private var rows: DataFrame = null
+    val stepKeys = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def start(histories: Seq[Seq[String]]): Seq[String] = startAt(histories)
+    def watermarks(): Option[Seq[String]] = wm
+    def report(): DataFrame = rows
+    def bootstrap(base: DataFrame, start: Seq[String], anyEmpty: => Boolean): Unit = {
+      rows = base
+      wm = Some(start)
+    }
+    def commit(report: DataFrame, wm: Seq[String]): Unit = {
+      rows = graft.core.Checkpoints.pin(report)
+      this.wm = Some(wm)
+    }
+    def keys(changed: DataFrame): DataFrame = {
+      val k = graft.core.Checkpoints.pin(changed)
+      stepKeys += k
+      k
+    }
+  }
+
+  /** The ONE consumer walk behind every maintained report, one source
+    * or several, durable or carried: bring `state` up to the latest
+    * version of every store in `stores` (one per `state.shape.sources`
+    * entry, in order). Returns the number of fold steps applied per
+    * source: all 0 on a restart with nothing new (idempotence — the
+    * guards call it again to prove exactly that), 1 per drained batch
+    * in steady state, >1 when catching up after missed folds.
+    *
+    *  1. Read the watermark vector (a durable report: one single-row
+    *     aggregate over its rows).
+    *  2. FRESH-CONSUMER BOOTSTRAP: a report with no recorded progress
+    *     starts at `state.start` — for a durable consumer the OLDEST
+    *     retained version of every source — with `report(start slices)`
+    *     as its base. Folding only the pairs after the start onto an
+    *     EMPTY base is correct when the start versions are empty
+    *     CreateTable versions, silently wrong once retention (q168's
+    *     `vacuumBefore`) has reclaimed them: the consumer would
+    *     permanently miss the oldest versions' contents, while its
+    *     watermarks read fully caught up for retention decisions.
+    *  3. Fold each source's pending version pairs in phases, in source
+    *     order, one commit per pair: while source i walks, sources
+    *     before it are held at their latest version (their phase is
+    *     done) and sources after it at their watermark. Each step's
+    *     arms are pruned to that source's changed keys. Phase
+    *     composition is exact by telescoping — for two sources, phase 1
+    *     accumulates `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈ I_wm)`,
+    *     phase 2 adds `report(O_cur ⋈ I_cur) ⊖ report(O_cur ⋈ I_wm)`;
+    *     the middle terms cancel, leaving exactly the recompute delta,
+    *     without needing any cross-store ordering of the histories
+    *     (version names are comparable only within one store; a
+    *     multi-source maintenance loop cannot assume a global clock).
+    *
+    * A watermark missing from its store's history means retention
+    * outran the consumer — a named failure before any step is folded.
+    */
+  private[graft] def maintain(stores: Seq[graft.state.StateTable],
+      state: ReportState): Seq[Int] = {
+    val shape = state.shape
+    val hs = stores.map(_.history())
+    require(hs.forall(_.nonEmpty), "a source store has no versions to fold")
+    var cur = state.watermarks().getOrElse {
+      val start = state.start(hs)
+      val slices = stores.zip(start).map { case (st, v) => st.readVersion(v) }
+      state.bootstrap(shape.report(slices: _*), start, slices.exists(_.isEmpty))
+      start
+    }
+    val idx = hs.zip(cur).map { case (h, v) => h.indexOf(v) }
+    require(idx.forall(_ >= 0),
+      s"report watermarks $cur not in the source histories — a store " +
+        "was vacuumed past the report's resume point")
+    stores.indices.map { i =>
+      val pairs = hs(i).drop(idx(i)).sliding(2).filter(_.size == 2).toSeq
+      pairs.foreach { case Seq(from, to) =>
+        val keys = state.keys(stores(i).diff(from, to)
+          .select(shape.sources(i).pruneCols.map(col): _*))
+        def slices(v: String) = stores.indices.map(j =>
+          stores(j).readVersion(if (j == i) v else cur(j)))
+        val next = cur.updated(i, to)
+        state.commit(shape.fold(state.report(), slices(from), slices(to), keys), next)
+        cur = next
+      }
+      pairs.size
+    }
+  }
 
   /** q164: incremental report maintenance off the store's CDC feed —
     * judged equal to a full recompute. At 100 TB the reference's
@@ -739,148 +1029,6 @@ object IngestQueries {
     * convention), one output sort. The CDC frame feeds both delta arms
     * — pinned once (Checkpoints.pin, the multi-consumer discipline).
     */
-  /** The generic ± fold behind EVERY SUM-shaped maintained aggregate
-    * (q164/q165/q167/q168's product report, q169's level-1 category
-    * report): `contrib` maps a version slice to PER-ROW measure
-    * contributions (`groupCols ++ measureCols`, with `n_rows` among
-    * the measures — the zero-shell filter reads it), and the fold
-    * unions the ±1-SIGNED row contributions of both arms onto `base`
-    * and aggregates ONCE. Equivalent to the former
-    * `report(after ⋉ keys) ⊖ report(before ⋉ keys)` form by
-    * distributivity of SUM over exact longs (every measure is an
-    * integer contribution — counts are `lit(1L)`, cents/quantities are
-    * floored/cast longs BEFORE summing), but pays ONE aggregation
-    * exchange instead of three (guide §2.3/§2.4): the per-arm
-    * aggregates were redundant work — the final group-by's partial
-    * (map-side) aggregation collapses each arm to group grain before
-    * the shuffle anyway, so the fused form shuffles the same key-grain
-    * bytes through two fewer exchanges (locally: two fewer sequential
-    * AQE stage jobs per fold — the family's measured cost driver).
-    * ONE definition so a fix to the fold algebra (or its change-feed
-    * precondition, documented at [[applyReportDelta]]) can never drift
-    * between the maintained families.
-    */
-  private[graft] def applySumDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame, keyCols: Seq[String],
-      contrib: DataFrame => DataFrame, groupCols: Seq[String],
-      measureCols: Seq[String]): DataFrame = {
-    def arm(version: DataFrame, sign: Long) =
-      contrib(version.join(changedKeys, keyCols, "left_semi"))
-        .select(groupCols.map(col) ++
-          measureCols.map(c => (col(c) * lit(sign)).as(c)): _*)
-    val aggs = measureCols.map(c => sum(col(c)).as(c))
-    base
-      .unionByName(arm(after, 1L)).unionByName(arm(before, -1L))
-      .groupBy(groupCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("n_rows") > 0)
-  }
-
-  /** A maintained SUM-shaped report family as ONE object: the
-    * aggregate definition, its grouping/measure columns (the
-    * [[applySumDelta]] arguments), and — derived, never hand-written —
-    * the durable report-store schema (group columns as strings unless
-    * `groupTypes` declares otherwise, measures as longs, plus the
-    * `as_of` resume watermark). Bundling them means a consumer
-    * ([[reportStoreHandle]] / [[resumeReportMaintenance]]) can never
-    * pair one family's fold with another's declared schema. Instances:
-    * [[productShape]] (q164–q168's per-product report),
-    * [[categoryShape]] (q169/q170's level-1 per-(group, product)
-    * report; q171's second consumer), [[joinedShape]] (q175's joined
-    * per-category report), and [[monthlyShape]] (q176's time-bucketed
-    * report — its DERIVED integer group keys are why `groupTypes`
-    * exists).
-    */
-  private[graft] final case class MaintainedShape(
-      /** Per-row measure contributions: maps a contents slice to
-        * `groupCols ++ measureCols` rows whose measures are exact LONG
-        * per-row contributions (counts as `lit(1L)`) — [[report]] is
-        * DERIVED from it (group-by + SUM), so the aggregate a consumer
-        * materializes and the fold's ± arms can never drift.
-        */
-      contrib: DataFrame => DataFrame,
-      groupCols: Seq[String], measureCols: Seq[String],
-      groupTypes: Seq[org.apache.spark.sql.types.DataType] = Nil) {
-    require(groupTypes.isEmpty || groupTypes.size == groupCols.size,
-      "groupTypes must be empty (all strings) or one per group column")
-    /** The full aggregate over a contents slice — the recompute legs'
-      * and base materializations' shape: one group-by exchange over the
-      * per-row contributions (SUM of `lit(1L)` replaces COUNT — same
-      * long values, and the shared definition is what makes the fused
-      * fold provably the same aggregate).
-      */
-    def report(df: DataFrame): DataFrame = {
-      val aggs = measureCols.map(c => sum(col(c)).as(c))
-      contrib(df).groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    def fold(base: DataFrame, before: DataFrame, after: DataFrame,
-        changedKeys: DataFrame, keyCols: Seq[String]): DataFrame =
-      applySumDelta(base, before, after, changedKeys, keyCols,
-        contrib, groupCols, measureCols)
-    def schema: org.apache.spark.sql.types.StructType = {
-      val types =
-        if (groupTypes.isEmpty)
-          groupCols.map(_ => org.apache.spark.sql.types.StringType)
-        else groupTypes
-      org.apache.spark.sql.types.StructType(
-        groupCols.zip(types).map { case (c, t) =>
-          org.apache.spark.sql.types.StructField(c, t) } ++
-        measureCols.map(c => org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.LongType)) :+
-        org.apache.spark.sql.types.StructField("as_of",
-          org.apache.spark.sql.types.StringType))
-    }
-  }
-
-  private[graft] val productShape: MaintainedShape =
-    MaintainedShape(productContrib, Seq("product_id"),
-      Seq("n_rows", "amount_cents"))
-
-  /** The product-report fold shared by q164 (one batch step off a
-    * report materialized from `before`), q165 (a CARRIED report folded
-    * per drained micro-batch), and q167/q168 (durable folds): apply
-    * the pruned ±delta derived from `changedKeys` to `base`, the
-    * materialized report for `before`'s contents. Correct for ALL
-    * three change kinds — inserts and updates land via the
-    * `after ⊖ before` arms over the changed keys, and a DELETED key's
-    * rows appear only in the before arm, retracting its contribution;
-    * a group whose rows ALL retracted leaves a zero shell, filtered in
-    * the shared fold (SUM/COUNT are self-maintainable; MIN/MAX needs
-    * the per-group recompute fallback — q169's [[maintainTopSellers]]).
-    *
-    * PRECONDITION on the change feed (applies to every [[applySumDelta]]
-    * caller): `changedKeys` must cover every key whose row MULTISET
-    * differs between the versions.
-    * [[graft.state.StateTable.diff]] is key-level (latest row per
-    * key), so a transition that added or removed value-identical
-    * COPIES of an existing key would slip past it — but transitions
-    * produced by [[graft.state.StateTable.upsert]] can never do that:
-    * the LWW arm rewrites an existing key's latest row IN PLACE and
-    * the insert arm appends only UNSEEN keys, so an existing key's
-    * multiplicity is invariant across an upsert, and any multiset
-    * change at an existing key shows up in its latest row's values
-    * (IngestCertSpec pins this invariant on the judged flow's own
-    * version pair). Feeding this fold from a store mutated by raw
-    * `overwrite` (multiset edits invisible at key level) needs a
-    * multiset-aware change feed instead — e.g. also diffing per-key
-    * row counts between the versions.
-    */
-  private[graft] def applyReportDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    productShape.fold(base, before, after, changedKeys, keyCols)
-
-  /** The q164 maintenance step as a named operator: one
-    * [[applyReportDelta]] fold onto the report materialized off
-    * `before`. The q164 flow exercises inserts + LWW updates; the
-    * delete arm is spec-pinned (IngestCertSpec) against a hand-built
-    * version pair, so the doc claim is tested, not asserted. The
-    * change-feed precondition is documented at [[applyReportDelta]].
-    */
-  private[graft] def maintainProductReport(before: DataFrame, after: DataFrame,
-      changedKeys: DataFrame, keyCols: Seq[String]): DataFrame =
-    applyReportDelta(productReport(before), before, after, changedKeys, keyCols)
-
   val q164IncrementalReportCert: QuerySpec = QuerySpec(
     (s, dir) => {
       val st = q161BuildStore(s, dir)
@@ -891,8 +1039,8 @@ object IngestQueries {
       val changedKeys = graft.core.Checkpoints.pin(
         st.diff(h(1), h(2)).select(keyCols.map(col): _*))
       val pinned = graft.core.Checkpoints.pin(
-        maintainProductReport(v2, v3, changedKeys, keyCols))
-      val equiv = multisetEquivDiff(pinned, productReport(v3), "product_id")
+        productShape.fold(productShape.report(v2), Seq(v2), Seq(v3), changedKeys))
+      val equiv = multisetEquivDiff(pinned, productShape.report(v3), "product_id")
       // inner join: equiv groups over the UNION of both report legs, a
       // superset of the maintained report's products by construction
       pinned.join(equiv, Seq("product_id")).orderBy(col("product_id"))
@@ -916,40 +1064,17 @@ object IngestQueries {
 
   /** q165's construction: the q162 streamed flow with q164's report
     * maintenance folded INSIDE the drain loop — after each drained
-    * micro-batch, derive the CDC step off the store's version pair and
-    * [[applyReportDelta]] the pruned ±delta onto the CARRIED report
-    * (base case: the report of the pre-drain version — empty at the
-    * CreateTable version). Each step's report and CDC key frame are
-    * pinned (Checkpoints.pin): the maintained artifact must not
-    * accrete lineage across drains — at production drain counts an
-    * unpinned fold's plan depth grows per micro-batch (the iterative-
-    * operator rule, `core/Checkpoints.scala`).
+    * micro-batch, one [[maintain]] walk folds the store's pending
+    * version pairs into the [[CarriedReport]] (base case: empty at the
+    * CreateTable version), pinning each step's report and CDC key
+    * frame.
     */
   private[graft] def q165BuildMaintainedStream(
       s: SparkSession, dir: String): MaintainedStream = {
-    val keyCols = graft.core.Schemas.ordersKey
-    var report: DataFrame = null
-    var prev: String = null // last version the fold consumed
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val flow = buildStreamedFlowStore(s, dir, "graft_q165", "q165", st => {
-      val h = st.history()
-      // fold from the last consumed version (CreateTable before the
-      // first drain) to the drain's head — robust even if a drain ever
-      // chunked into several versions (the builder's history require
-      // would still fail the run loudly afterwards)
-      val from = if (prev == null) h.head else prev
-      val to = h.last
-      val before = st.readVersion(from)
-      val after = st.readVersion(to)
-      val changedKeys = graft.core.Checkpoints.pin(
-        st.diff(from, to).select(keyCols.map(col): _*))
-      steps += changedKeys
-      val base = if (report == null) productReport(before) else report
-      report = graft.core.Checkpoints.pin(
-        applyReportDelta(base, before, after, changedKeys, keyCols))
-      prev = to
-    })
-    MaintainedStream(flow.st, report, steps.toSeq)
+    val state = new CarriedReport(productShape, _.map(_.head))
+    val flow = buildStreamedFlowStore(s, dir, "graft_q165", "q165",
+      st => maintain(Seq(st), state): Unit)
+    MaintainedStream(flow.st, state.report(), state.stepKeys.toSeq)
   }
 
   /** q165: the maintained report under STREAMING ingest — the 100 TB
@@ -985,7 +1110,7 @@ object IngestQueries {
   val q165StreamingReportMaintCert: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q165BuildMaintainedStream(s, dir)
-      val recompute = productReport(m.st.current().get)
+      val recompute = productShape.report(m.st.current().get)
       val equiv = multisetEquivDiff(m.report, recompute, "product_id")
       // inner join: equiv groups over the UNION of both report legs, a
       // superset of the maintained report's products by construction
@@ -1041,122 +1166,47 @@ object IngestQueries {
   // story q165 leaves implicit
   // ------------------------------------------------------------------
 
-  /** The durable report table's declared schema: the report columns
-    * plus `as_of`, the orders-store version string the report
-    * reflects — the resume watermark. Constant across a version's rows
-    * (every fold stamps the version it consumed), so `max(as_of)` on
-    * the current contents recovers the watermark with no sidecar
-    * metadata file; version strings sort by their monotonic
-    * nano-timestamp prefix, so max IS the latest. Derived from
-    * [[productShape]] — the schema and the fold can never drift.
-    */
-  private[graft] val reportSchema: org.apache.spark.sql.types.StructType =
-    productShape.schema
-
   /** A (possibly fresh-process) handle to the durable report table at
-    * `root` for one maintained `shape`: first call CreateTables it via
-    * the same SchemaSync leg every flow store uses (R4 sequencing),
-    * later calls must find it already in sync — any other applied
-    * change is a named failure.
+    * `root` for one maintained `shape`: first call CreateTables its
+    * [[MaintainedShape.schema]] via the same SchemaSync leg every flow
+    * store uses (R4 sequencing), later calls must find it already in
+    * sync — any other applied change is a named failure.
     */
   private[graft] def reportStoreHandle(
       s: SparkSession, root: String,
-      shape: MaintainedShape = productShape,
-      label: String = "q167"): graft.state.StateTable = {
+      shape: MaintainedShape = productShape): graft.state.StateTable = {
     val st = new graft.state.StateTable(s, root, shape.groupCols)
     val changes = graft.schemasync.SchemaSync.sync(s, st, shape.schema)
     require(changes.isEmpty ||
       changes == Seq(graft.schemasync.SchemaSync.CreateTable(shape.schema)),
-      s"$label precondition: report-store sync applied $changes")
+      s"report store $root: sync applied $changes")
     st
   }
 
-  /** The consumer's raw resume point off its durable rows: `max(as_of)`
-    * on the report's current contents — a single-row aggregate read,
-    * the sanctioned driver-side shape. None means an EMPTY report — no
-    * consumer progress recorded (the bootstrap-vs-caught-up distinction
-    * [[resumeReportMaintenance]] needs on a retention-vacuumed store).
-    */
-  private[graft] def reportWatermarkOpt(
-      reportSt: graft.state.StateTable): Option[String] =
-    Option(reportSt.current().get.agg(max(col("as_of"))).head().getString(0))
-
-  /** [[reportWatermarkOpt]] with the empty-report fallback to `oldest`
-    * (the store's first retained version): an un-started consumer
-    * bounds retention at the oldest version, so a resume can still
-    * fold everything and a bounded vacuum reclaims nothing. ONE
-    * definition for the resume walk, the q168/q171 retention hooks,
-    * and the specs, so the convention cannot drift.
+  /** A single-source report's resume point: its durable `as_of` (every
+    * single-source shape stamps it), with the empty-report fallback to
+    * `oldest` (the store's first retained version): an un-started
+    * consumer bounds retention at the oldest version, so a resume can
+    * still fold everything and a bounded vacuum reclaims nothing. ONE
+    * definition for the q168/q171 retention hooks and the specs, so
+    * the convention cannot drift.
     */
   private[graft] def reportWatermark(
       reportSt: graft.state.StateTable, oldest: => String): String =
-    reportWatermarkOpt(reportSt).getOrElse(oldest)
+    new DurableReport(reportSt, productShape).watermarks().fold(oldest)(_.head)
 
-  /** Resume report maintenance from DURABLE state only: recover the
-    * `as_of` watermark off the report table's current contents, then
-    * fold every orders-store version pair AFTER it — `shape.fold` per
-    * step, one report version written per step (`overwrite` stamps the
-    * new watermark; the durable write IS the lineage truncation, so no
-    * in-memory pin is needed). Returns the number of fold steps
-    * applied: 0 on a restart with nothing new (idempotence — the guard
-    * calls it a third time to prove exactly that), 1 per drained batch
-    * in steady state, >1 when catching up after missed folds.
-    * Versioned immutability makes the concurrent read-while-write
-    * safe: each step's base is read from the CURRENT version dir while
-    * the next version writes to a fresh dir.
-    *
-    * FRESH-CONSUMER BOOTSTRAP (round-17 advice, medium): an empty
-    * report's watermark falls back to the OLDEST retained version and
-    * the walk folds only pairs AFTER it — correct when that version is
-    * the flow's empty CreateTable, silently wrong once retention
-    * (q168's `vacuumBefore`) has reclaimed it: the consumer would fold
-    * deltas onto an empty base, permanently missing the oldest
-    * version's contents, while its watermark reads fully caught up for
-    * retention decisions. So an empty report on a store whose oldest
-    * retained version carries rows first materializes its base as
-    * `shape.report(oldest contents)` stamped `as_of = oldest`, then
-    * walks the pairs. The `isEmpty` gate (a bounded limit-1 read, taken
-    * only on the empty-report path) keeps the judged q167/q168 flows —
-    * whose oldest version IS the empty CreateTable — byte-identical in
-    * behavior and report-version counts.
+  /** Resume single-source report maintenance from DURABLE state only:
+    * the one-source [[maintain]] walk over the orders store, its
+    * changes pruned on `keyCols`, one report version written per fold
+    * step. Returns the number of fold steps applied.
     */
   private[graft] def resumeReportMaintenance(
       ordersSt: graft.state.StateTable,
       reportSt: graft.state.StateTable,
       keyCols: Seq[String],
-      shape: MaintainedShape = productShape): Int = {
-    val h = ordersSt.history()
-    require(h.nonEmpty, "q167: orders store has no versions to fold")
-    val wmOpt = reportWatermarkOpt(reportSt)
-    if (wmOpt.isEmpty && !ordersSt.readVersion(h.head).isEmpty)
-      reportSt.overwrite(shape.report(ordersSt.readVersion(h.head))
-        .withColumn("as_of", lit(h.head)))
-    val asOf = wmOpt.getOrElse(h.head)
-    val idx = h.indexOf(asOf)
-    require(idx >= 0,
-      s"q167: report watermark $asOf not in the orders store history — " +
-        "the store was vacuumed past the report's resume point")
-    val pairs = h.drop(idx).sliding(2).filter(_.size == 2).toSeq
-    pairs.foreach { case Seq(from, to) =>
-      val before = ordersSt.readVersion(from)
-      val after = ordersSt.readVersion(to)
-      // the CDC key frame rides UNPINNED into the fold write: the
-      // durable report write is this step's lineage truncation, so an
-      // eager pin here only added one extra sequential job round-trip
-      // per fold (the family's cost is job COUNT, not volume — §1.2/
-      // §2.4). The diff subtree appears in both ± arms, but it is
-      // deterministic (max_by over the unique-per-row _seq) and its
-      // exchanges are reused within the single write job where the
-      // planner proves the subtrees identical — measured on q167/q168:
-      // one job fewer per fold, same fold output.
-      val changedKeys = ordersSt.diff(from, to).select(keyCols.map(col): _*)
-      val base = reportSt.current().get.drop("as_of")
-      reportSt.overwrite(
-        shape.fold(base, before, after, changedKeys, keyCols)
-          .withColumn("as_of", lit(to)))
-    }
-    pairs.size
-  }
+      shape: MaintainedShape = productShape): Int =
+    maintain(Seq(ordersSt), new DurableReport(reportSt, shape.copy(
+      sources = Seq(shape.sources.head.copy(pruneCols = keyCols))))).head
 
   /** q167's construction: the q162 streamed flow with the maintenance
     * persisted DURABLY per drain, and every fold performed by a
@@ -1221,7 +1271,7 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val reportSt = reportStoreHandle(s, flow.reportRoot)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productReport(ordersSt.current().get)
+      val recompute = productShape.report(ordersSt.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
@@ -1328,7 +1378,7 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val reportSt = reportStoreHandle(s, flow.reportRoot)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = productReport(ordersSt.current().get)
+      val recompute = productShape.report(ordersSt.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))
@@ -1354,32 +1404,20 @@ object IngestQueries {
 
   /** Level 1 of the top-seller maintenance: per (channel_group,
     * product_id) revenue and row count. SUM-shaped, so the ± delta
-    * algebra maintains it exactly like [[productReport]] — one
+    * algebra maintains it exactly like [[productShape]] — one
     * definition for the base snapshot, both delta arms, and the
-    * recompute certificate leg.
+    * recompute certificate leg; an LWW update that rewrites
+    * channel_group is a group MOVE, absorbed by the ± arms
+    * ([[MaintainedShape.fold]]).
     */
-  private def categoryContrib(contents: DataFrame): DataFrame =
-    contents.select(col("channel_group"), col("product_id"),
+  private def categoryContrib(slices: Seq[DataFrame]): DataFrame =
+    slices.head.select(col("channel_group"), col("product_id"),
       lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("revenue_cents"))
 
-  private[graft] def categoryReport(contents: DataFrame): DataFrame =
-    categoryShape.report(contents)
-
-  /** [[applyReportDelta]]'s ± fold at the two-level (channel_group,
-    * product_id) key. Group MOVES are absorbed for free: an LWW update
-    * that rewrites channel_group retracts the key's rows from the old
-    * group via the before arm and adds them to the new one via the
-    * after arm. Same change-feed precondition as [[applyReportDelta]].
-    */
   private[graft] val categoryShape: MaintainedShape =
     MaintainedShape(categoryContrib, Seq("channel_group", "product_id"),
       Seq("n_rows", "revenue_cents"))
-
-  private[graft] def applyCategoryDelta(base: DataFrame, before: DataFrame,
-      after: DataFrame, changedKeys: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    categoryShape.fold(base, before, after, changedKeys, keyCols)
 
   /** Level 2: the best-selling product per channel group off a level-1
     * frame — deterministic argmax (revenue ties broken by LARGEST
@@ -1405,8 +1443,8 @@ object IngestQueries {
         after.join(changedKeys, keyCols, "left_semi").select(col("channel_group")))
       .distinct()
 
-  /** The MIN/MAX maintenance step ([[applyReportDelta]]'s documented
-    * fallback, now implemented): an argmax is NOT self-maintainable
+  /** The MIN/MAX maintenance step ([[MaintainedShape.fold]]'s
+    * documented fallback): an argmax is NOT self-maintainable
     * under retraction — a revenue decrease or a deleted row can
     * dethrone a group's leader, and no ± algebra on the TOP row alone
     * can recover the runner-up. The fallback recomputes level 2 ONLY
@@ -1433,11 +1471,14 @@ object IngestQueries {
   /** The carried two-level fold state shared by q169 (streamed drains
     * only) and q170 (drains + a mid-loop purge transition): one
     * [[step]] per store version landed — level 1 by ± delta
-    * ([[applyCategoryDelta]]), level 2 by touched-group recompute
+    * ([[categoryShape]]'s fold), level 2 by touched-group recompute
     * ([[maintainTopSellers]]). Both carried artifacts are pinned per
     * step (the q165 lineage discipline: plan depth O(1) in step
     * count). ONE fold implementation so the purge certificate can
-    * never drift from the drain certificate's algebra.
+    * never drift from the drain certificate's algebra. Not a
+    * [[maintain]] walk: each step also derives the touched groups
+    * from the same version pair and pins them next to the level-1
+    * fold, which [[ReportState]]'s commit never sees.
     */
   private[graft] final class TopFoldState(keyCols: Seq[String]) {
     var lvl1: DataFrame = null
@@ -1453,7 +1494,7 @@ object IngestQueries {
       val after = st.readVersion(to)
       val changedKeys = graft.core.Checkpoints.pin(
         st.diff(from, to).select(keyCols.map(col): _*))
-      val base = if (lvl1 == null) categoryReport(before) else lvl1
+      val base = if (lvl1 == null) categoryShape.report(before) else lvl1
       val baseTop = if (top == null) topSellers(base) else top
       // the level-1 ± fold and the touched-group derivation read the
       // same immutable inputs (before/after versions + the pinned CDC
@@ -1461,7 +1502,7 @@ object IngestQueries {
       // (guide §2.6); level 2 below needs both, so it stays after
       val (l1, touched) = graft.core.Par.both(
         graft.core.Checkpoints.pin(
-          applyCategoryDelta(base, before, after, changedKeys, keyCols)),
+          categoryShape.fold(base, Seq(before), Seq(after), changedKeys)),
         graft.core.Checkpoints.pin(
           touchedGroups(before, after, changedKeys, keyCols)))
       lvl1 = l1
@@ -1489,7 +1530,7 @@ object IngestQueries {
     * `README.md:132–148`) under streaming ingest — the capability step
     * beyond q165/q167, whose maintained reports are SUM/COUNT-shaped
     * and so self-maintainable. MIN/MAX/argmax is the documented hole
-    * ([[applyReportDelta]]'s limitation note): retraction can dethrone
+    * ([[MaintainedShape.fold]]'s limitation note): retraction can dethrone
     * a leader, and the production answer is the two-level design
     * judged here — a ±-maintained per-(group, product) revenue
     * aggregate (level 1) plus an argmax recomputed per step ONLY for
@@ -1526,7 +1567,7 @@ object IngestQueries {
   val q169MaintainedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q169BuildMaintainedTop(s, dir)
-      val lvl1Re = categoryReport(m.st.current().get)
+      val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
       val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
@@ -1542,7 +1583,7 @@ object IngestQueries {
     },
     s"""$flowStoreReplaySql,
        |-- the zero-net filter mirrors the Spark fold's n_rows > 0 shell
-       |-- filter (applySumDelta): a product whose weighted rows net to
+       |-- filter (MaintainedShape.fold): a product whose weighted rows net to
        |-- zero must not appear on either side (unreachable at this
        |-- upsert-only corpus, load-bearing under deletions — q170)
        |lvl1 AS (
@@ -1674,7 +1715,7 @@ object IngestQueries {
   val q170PurgedTopSellers: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q170BuildPurgedTop(s, dir)
-      val lvl1Re = categoryReport(m.st.current().get)
+      val lvl1Re = categoryShape.report(m.st.current().get)
       val lvl1Equiv = multisetEquivDiff(m.lvl1, lvl1Re, "channel_group")
         .withColumnRenamed("equiv_diff", "lvl1_equiv_diff")
       val topEquiv = multisetEquivDiff(m.top, topSellers(lvl1Re), "channel_group")
@@ -1765,8 +1806,8 @@ object IngestQueries {
       drains += 1
       // fresh handles per phase (q167's restart realism)
       val orders = new graft.state.StateTable(s, st.root, keyCols)
-      val repA = reportStoreHandle(s, aRoot, productShape, "q171")
-      val repB = reportStoreHandle(s, bRoot, categoryShape, "q171")
+      val repA = reportStoreHandle(s, aRoot, productShape)
+      val repB = reportStoreHandle(s, bRoot, categoryShape)
       // the laggard: no phase-1 fold at all — its durable watermark
       // stays the empty-report fallback until the phase-2 catch-up;
       // the two consumers' resumes touch disjoint report roots over
@@ -1839,8 +1880,8 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q171BuildMultiConsumerFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape, "q171")
-      val repB = reportStoreHandle(s, flow.bRoot, categoryShape, "q171")
+      val repA = reportStoreHandle(s, flow.aRoot, productShape)
+      val repB = reportStoreHandle(s, flow.bRoot, categoryShape)
       // post-reclaim resumability: fresh handles against the vacuumed
       // store apply ZERO steps (idempotence judged, not just spec'd);
       // disjoint report roots — overlapped (guide §2.6)
@@ -1860,11 +1901,11 @@ object IngestQueries {
         .select(kv("b_n_rows" -> col("n"),
           "b_revenue_cents_total" -> col("cents")).as(Seq("metric", "value")))
       val aEquiv = multisetEquivDiff(repA.current().get.drop("as_of"),
-          productReport(current), "product_id")
+          productShape.report(current), "product_id")
         .agg(sum(col("equiv_diff")).as("d"))
         .select(kv("a_equiv_diff" -> col("d")).as(Seq("metric", "value")))
       val bEquiv = multisetEquivDiff(repB.current().get.drop("as_of"),
-          categoryReport(current), "channel_group")
+          categoryShape.report(current), "channel_group")
         .agg(sum(col("equiv_diff")).as("d"))
         .select(kv("b_equiv_diff" -> col("d")).as(Seq("metric", "value")))
       val consts = s.range(1).select(kv(
@@ -1934,7 +1975,7 @@ object IngestQueries {
     *     construction — product_id is part of the composite key);
     *  3. BOTH consumers resume one purge fold each — the veteran off
     *     its drain watermark, the newcomer off its bootstrap stamp —
-    *     driving [[applyReportDelta]]'s delete arm (retraction +
+    *     driving the fold's delete arm (retraction +
     *     whole-group zero-shell filtering) through a REAL store
     *     transition;
     *  4. retention reclaims exactly the absorbed pre-purge version.
@@ -1945,11 +1986,11 @@ object IngestQueries {
     val base = q168BuildRetainedFlow(s, dir)
     val orders = new graft.state.StateTable(s, base.ordersRoot, keyCols)
     val bRoot = graft.core.Staging.invocationDir("graft_q172_rep_b", dir)
-    val repB = reportStoreHandle(s, bRoot, productShape, "q172")
+    val repB = reportStoreHandle(s, bRoot, productShape)
     val bootstrapSteps = resumeReportMaintenance(orders, repB, keyCols)
     orders.overwrite(orders.read().get
       .filter(col("product_id").cast("long") % 17 =!= 0))
-    val repA = reportStoreHandle(s, base.reportRoot, productShape, "q172")
+    val repA = reportStoreHandle(s, base.reportRoot, productShape)
     // both consumers fold the same purge transition into disjoint
     // report roots over the read-only orders history — overlapped
     // (guide §2.6)
@@ -2011,13 +2052,13 @@ object IngestQueries {
       val flow = q172BuildBootstrapFlow(s, dir)
       val keyCols = graft.core.Schemas.ordersKey
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val repA = reportStoreHandle(s, flow.aRoot, productShape, "q172")
-      val repB = reportStoreHandle(s, flow.bRoot, productShape, "q172")
+      val repA = reportStoreHandle(s, flow.aRoot, productShape)
+      val repB = reportStoreHandle(s, flow.bRoot, productShape)
       val a = repA.current().get.drop("as_of")
       val b = repB.current().get.drop("as_of")
       val bEquiv = multisetEquivDiff(a, b, "product_id")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, productReport(orders.current().get),
+      val reEquiv = multisetEquivDiff(a, productShape.report(orders.current().get),
           "product_id")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
       a.withColumn("bootstrap_steps", lit(flow.bootstrapSteps.toLong))
@@ -2067,7 +2108,7 @@ object IngestQueries {
     val keyCols = graft.core.Schemas.ordersKey
     val orders = q161BuildStore(s, dir)
     val reportRoot = graft.core.Staging.invocationDir("graft_q173_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape, "q173")
+    val report = reportStoreHandle(s, reportRoot, productShape)
     val flowSteps = resumeReportMaintenance(orders, report, keyCols)
     // fragmentation precondition (q156's convention): the compaction
     // must have real work, or the transparency certificate is vacuous
@@ -2144,10 +2185,10 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q173BuildCompactionFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape, "q173")
+      val report = reportStoreHandle(s, flow.reportRoot, productShape)
       val maintained = report.current().get.drop("as_of")
       val equiv = multisetEquivDiff(maintained,
-        productReport(orders.current().get), "product_id")
+        productShape.report(orders.current().get), "product_id")
       // post-compact layout: a single-row aggregate read off the
       // writer's actual file metadata (q156's accounting convention)
       val nFiles = orders.read().get
@@ -2209,7 +2250,7 @@ object IngestQueries {
     val (dirA, dirB) = stageFlowBatches(s, dir, "graft_q174")
     val orders = freshSyncedStore(s, dir, "graft_q174_state", "q174")
     val reportRoot = graft.core.Staging.invocationDir("graft_q174_report", dir)
-    val report = reportStoreHandle(s, reportRoot, productShape, "q174")
+    val report = reportStoreHandle(s, reportRoot, productShape)
     // phase 1: first load, consumer catches up (CreateTable + load)
     orders.upsert(Ingest.readOrdersCsv(s, dirA))
     val loadSteps = resumeReportMaintenance(orders, report, keyCols)
@@ -2298,10 +2339,10 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q174BuildEvolutionFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val report = reportStoreHandle(s, flow.reportRoot, productShape, "q174")
+      val report = reportStoreHandle(s, flow.reportRoot, productShape)
       val maintained = report.current().get.drop("as_of")
       val equiv = multisetEquivDiff(maintained,
-        productReport(orders.current().get), "product_id")
+        productShape.report(orders.current().get), "product_id")
       maintained
         .withColumn("n_steps_load", lit(flow.loadSteps.toLong))
         .withColumn("n_steps_evo", lit(flow.evoSteps.toLong))
@@ -2342,21 +2383,35 @@ object IngestQueries {
     orders.join(inv.select(col("product_id"), col("category")),
       Seq("product_id"))
 
-  /** Revenue per category off the joined view — SUM-shaped, so the ±
-    * delta algebra maintains it ([[applySumDelta]]); one definition for
-    * the base snapshot, both delta arms, and the recompute certificate
-    * leg.
+  /** Revenue per category off the joined view of (orders, inventories)
+    * slices — SUM-shaped, so the ± delta algebra maintains it
+    * ([[MaintainedShape.fold]]); one definition for the base snapshot,
+    * both delta arms, and the recompute certificate leg.
     */
-  private def joinedContrib(joined: DataFrame): DataFrame =
-    joined.select(col("category"), lit(1L).as("n_rows"),
+  private def joinedContrib(slices: Seq[DataFrame]): DataFrame =
+    joinedView(slices(0), slices(1)).select(col("category"),
+      lit(1L).as("n_rows"),
       floor(col("amount") * 100).cast("long").as("revenue_cents"))
 
-  private[graft] def joinedCategoryReport(joined: DataFrame): DataFrame =
-    joinedShape.report(joined)
-
+  /** The two-source shape: orders stamped `as_of`, inventories
+    * `as_of_dim` — a maintained view of N sources needs N watermarks,
+    * one per change feed. Both feeds prune on `product_id`, the
+    * combined-arm form of the textbook two-table IVM expansion
+    * `Δ(O⋈I) = ΔO⋈I ∪ O⋈ΔI ∪ ΔO⋈ΔI`: with P the products a step
+    * changed, the fold applies `report(σ_P O_after ⋈ σ_P I_after) ⊖
+    * report(σ_P O_before ⋈ σ_P I_before)` — products outside P
+    * contribute identically to both arms and cancel, so restricting to
+    * P loses nothing, and each arm reads only the changed products'
+    * order slices plus their single catalog rows. An order-side change
+    * prices at its changed keys; a dimension move prices at the moved
+    * products' fact slices — never the store size, never a full
+    * joined-report recompute.
+    */
   private[graft] val joinedShape: MaintainedShape =
     MaintainedShape(joinedContrib, Seq("category"),
-      Seq("n_rows", "revenue_cents"))
+      Seq("n_rows", "revenue_cents"),
+      sources = Seq(Source("as_of", Seq("product_id")),
+        Source("as_of_dim", Seq("product_id"))))
 
   /** q175's dimension-move batch: every real catalog product with
     * k ≡ 0 (mod 3) is re-listed under a brand-new category with name/
@@ -2372,109 +2427,27 @@ object IngestQueries {
         col("k") % 10 =!= 0)
       .withColumn("c_mktsegment", lit("RELOCATED"))
 
-  /** The carried two-store join-fold state: one [[step]] per change
-    * landed on EITHER store. The delta algebra is the combined-arm
-    * form of the textbook two-table IVM expansion
-    * `Δ(O⋈I) = ΔO⋈I ∪ O⋈ΔI ∪ ΔO⋈ΔI`: with
-    * P = π_product(ΔO) ∪ keys(ΔI) (the products whose joined slice can
-    * change), the fold applies
-    * `report(σ_P O_after ⋈ σ_P I_after) ⊖ report(σ_P O_before ⋈ σ_P I_before)`
-    * through the shared [[applySumDelta]] ±1-weighted union-groupBy —
-    * products outside P contribute identically to both arms and
-    * cancel, so restricting to P loses nothing, and each arm reads
-    * only the changed products' order slices plus their single catalog
-    * rows (the middle `O⋈ΔI` arm's other-side current version arrives
-    * semi-join-pruned, exactly the change-volume-proportional cost the
-    * expansion promises). An order-side change prices at its changed
-    * keys; a dimension move prices at the moved products' fact slices
-    * — never the store size, never a full joined-report recompute.
-    *
-    * The dimension base is the inventory version CURRENT at the fold's
-    * first observation: earlier dimension history belongs to the base
-    * report, not to any change step. Both carried artifacts are pinned
-    * per step (the q165 lineage discipline). ONE fold implementation
-    * so the order-side and dimension-side certificates can never drift
-    * to different algebras.
-    */
-  private[graft] final class JoinFoldState {
-    var report: DataFrame = null
-    private var prevO: String = null
-    private var prevI: String = null
-    val affectedSteps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val orderChangedSteps = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val dimChangedSteps = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    def step(ordersSt: graft.state.StateTable,
-        invSt: graft.state.StateTable): Unit = {
-      val fromO = if (prevO == null) ordersSt.history().head else prevO
-      val toO = ordersSt.history().last
-      val fromI = if (prevI == null) invSt.history().last else prevI
-      val toI = invSt.history().last
-      val changedO = toO != fromO
-      val changedI = toI != fromI
-      require(changedO || changedI,
-        "q175: fold step with no change on either store")
-      val arms = Seq(
-        if (changedO) Some(ordersSt.diff(fromO, toO).select(col("product_id")))
-        else None,
-        if (changedI) Some(invSt.diff(fromI, toI).select(col("product_id")))
-        else None).flatten
-      val affected = graft.core.Checkpoints.pin(
-        arms.reduce(_ unionByName _).distinct())
-      val oBefore = ordersSt.readVersion(fromO)
-      val oAfter = ordersSt.readVersion(toO)
-      val base =
-        if (report == null)
-          joinedCategoryReport(joinedView(oBefore, invSt.readVersion(fromI)))
-        else report
-      report = graft.core.Checkpoints.pin(foldJoinedDelta(base,
-        oBefore, oAfter,
-        invSt.readVersion(fromI), invSt.readVersion(toI), affected))
-      affectedSteps += affected
-      orderChangedSteps += changedO
-      dimChangedSteps += changedI
-      prevO = toO
-      prevI = toI
-    }
-  }
-
-  /** ONE joined-fold delta application shared by the carried
-    * ([[JoinFoldState]]) and durable ([[resumeJoinedMaintenance]])
-    * consumers — the two-store analog of [[applyReportDelta]], so the
-    * streamed and durable certificates can never drift to different
-    * algebras. `affected` is P = π_product(ΔO) ∪ keys(ΔI); both join
-    * sides arrive pruned to P before the inner join, and the shared
-    * [[applySumDelta]] ± discipline does the rest.
-    */
-  private[graft] def foldJoinedDelta(base: DataFrame,
-      oBefore: DataFrame, oAfter: DataFrame,
-      iBefore: DataFrame, iAfter: DataFrame,
-      affected: DataFrame): DataFrame = {
-    def pruned(i: DataFrame) =
-      i.join(affected, Seq("product_id"), "left_semi")
-    joinedShape.fold(base,
-      joinedView(oBefore, pruned(iBefore)),
-      joinedView(oAfter, pruned(iAfter)),
-      affected, Seq("product_id"))
-  }
-
   /** q175's handles: both stores, the carried joined report, the
-    * per-step affected-product frames (pinned) and change-side flags,
-    * and the pre-move report for the guards.
+    * per-step affected-product frames (pinned), the per-resume fold
+    * counts per source (orders, inventories), and the pre-move report
+    * for the guards.
     */
   private[graft] final case class MaintainedJoinFlow(
       ordersSt: graft.state.StateTable, invSt: graft.state.StateTable,
       report: DataFrame, affectedSteps: Seq[DataFrame],
-      orderChangedSteps: Seq[Boolean], dimChangedSteps: Seq[Boolean],
-      preMoveReport: DataFrame)
+      steps: Seq[Seq[Int]], preMoveReport: DataFrame)
 
   /** q175's construction: the inventories store loads its catalog
     * (q163's batch-1 leg), then the q169-convention streamed orders
-    * flow runs with one [[JoinFoldState]] step per drained micro-batch
-    * — and MID-LOOP, after the second drain's fold, the dimension
-    * update lands: [[q175MoveBatch]] re-lists every k ≡ 0 (mod 3) real
-    * product under a new category through the same CSV→LWW-upsert leg,
-    * and a third fold absorbs the move with the ORDERS side unchanged
-    * (the pure-dimension-change path).
+    * flow runs with one [[maintain]] walk of a [[CarriedReport]] per
+    * drained micro-batch — and MID-LOOP, after the second drain's
+    * fold, the dimension update lands: [[q175MoveBatch]] re-lists every
+    * k ≡ 0 (mod 3) real product under a new category through the same
+    * CSV→LWW-upsert leg, and a third walk absorbs the move with the
+    * ORDERS side unchanged (the pure-dimension-change path). The walk
+    * starts at the orders store's oldest version and the inventories
+    * store's CURRENT one: earlier dimension history belongs to the
+    * base report, not to any change step.
     */
   private[graft] def q175BuildJoinedFlow(
       s: SparkSession, dir: String): MaintainedJoinFlow = {
@@ -2490,20 +2463,19 @@ object IngestQueries {
       freshSyncedStore(s, dir, "graft_q175_inv_state", "q175",
         graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
     invSt.upsert(Ingest.readInventoriesCsv(s, invB1))
-    val fold = new JoinFoldState
-    var drains = 0
+    val state = new CarriedReport(joinedShape, hs => Seq(hs(0).head, hs(1).last))
+    val steps = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
     var preMove: DataFrame = null
     val flow = buildStreamedFlowStore(s, dir, "graft_q175", "q175", st => {
-      fold.step(st, invSt)
-      drains += 1
-      if (drains == 2) {
-        preMove = fold.report
+      steps += maintain(Seq(st, invSt), state)
+      if (steps.size == 2) {
+        preMove = state.report()
         invSt.upsert(Ingest.readInventoriesCsv(s, invMove))
-        fold.step(st, invSt)
+        steps += maintain(Seq(st, invSt), state)
       }
     })
-    MaintainedJoinFlow(flow.st, invSt, fold.report, fold.affectedSteps.toSeq,
-      fold.orderChangedSteps.toSeq, fold.dimChangedSteps.toSeq, preMove)
+    MaintainedJoinFlow(flow.st, invSt, state.report(), state.stepKeys.toSeq,
+      steps.toSeq, preMove)
   }
 
   /** q175: the maintained JOIN report — incremental view maintenance
@@ -2517,7 +2489,7 @@ object IngestQueries {
     * over the fact store. q175 certifies the production answer: A3's
     * revenue-per-category (category sourced from the inventories
     * STORE, not the fact rows) maintained under changes to BOTH stores
-    * via [[JoinFoldState]]'s combined-arm delta — two order-side folds
+    * via [[joinedShape]]'s combined-arm delta — two order-side folds
     * (the streamed drains) and one dimension-side fold (a real
     * mid-loop category move through the CSV→LWW leg). The judged rows
     * are the final maintained report per category — the moved
@@ -2557,8 +2529,8 @@ object IngestQueries {
   val q175MaintainedJoinReport: QuerySpec = QuerySpec(
     (s, dir) => {
       val m = q175BuildJoinedFlow(s, dir)
-      val recompute = joinedCategoryReport(joinedView(
-        m.ordersSt.current().get, m.invSt.current().get))
+      val recompute = joinedShape.report(
+        m.ordersSt.current().get, m.invSt.current().get)
       val equiv = multisetEquivDiff(m.report, recompute, "category")
       // the dimension fold's affected-product count (a single-row
       // aggregate read on the pinned affected frame) and the catalog
@@ -2568,10 +2540,8 @@ object IngestQueries {
         m.affectedSteps.last.count(), m.invSt.current().get.count())
       m.report
         .withColumn("n_steps", lit(m.affectedSteps.size.toLong))
-        .withColumn("n_order_steps",
-          lit(m.orderChangedSteps.count(identity).toLong))
-        .withColumn("n_dim_steps",
-          lit(m.dimChangedSteps.count(identity).toLong))
+        .withColumn("n_order_steps", lit(m.steps.map(_(0)).sum.toLong))
+        .withColumn("n_dim_steps", lit(m.steps.map(_(1)).sum.toLong))
         .withColumn("n_dim_affected", lit(nDimAffected))
         .withColumn("n_catalog", lit(nCatalog))
         .join(equiv, Seq("category"))
@@ -2612,128 +2582,12 @@ object IngestQueries {
   // onboarding) for the JOINED report family
   // ------------------------------------------------------------------
 
-  /** The durable joined-report schema: [[joinedShape]]'s columns plus
-    * a SECOND resume watermark — `as_of` is the orders-store version
-    * the report reflects (the single-store convention) and `as_of_dim`
-    * the inventories-store version. A maintained view of N sources
-    * needs N watermarks, one per change feed; both are constant across
-    * a version's rows, so two single-row max() reads recover the pair
-    * with no sidecar metadata.
-    */
-  private[graft] val joinedReportSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(joinedShape.schema.fields :+
-      org.apache.spark.sql.types.StructField("as_of_dim",
-        org.apache.spark.sql.types.StringType))
-
-  /** [[reportStoreHandle]]'s analog for the two-watermark joined
-    * report table: first call CreateTables [[joinedReportSchema]],
-    * later calls must find it in sync.
-    */
-  private[graft] def joinedReportHandle(
-      s: SparkSession, root: String): graft.state.StateTable = {
-    val st = new graft.state.StateTable(s, root, joinedShape.groupCols)
-    val changes = graft.schemasync.SchemaSync.sync(s, st, joinedReportSchema)
-    require(changes.isEmpty ||
-      changes == Seq(graft.schemasync.SchemaSync.CreateTable(joinedReportSchema)),
-      s"q177 precondition: joined-report sync applied $changes")
-    st
-  }
-
-  /** The durable (orders, inventories) watermark pair off the joined
-    * report's current rows — None on an empty report (the
-    * bootstrap-vs-caught-up distinction, q172's convention).
-    */
-  private[graft] def joinedWatermarksOpt(
-      reportSt: graft.state.StateTable): Option[(String, String)] = {
-    val r = reportSt.current().get
-      .agg(max(col("as_of")), max(col("as_of_dim"))).head()
-    if (r.isNullAt(0)) None else Some((r.getString(0), r.getString(1)))
-  }
-
-  /** Resume JOINED-report maintenance from durable state only — the
-    * two-store analog of [[resumeReportMaintenance]]. Recover the
-    * watermark pair, then absorb the two change feeds in two phases,
-    * each a walk of version pairs folded through the shared
-    * [[foldJoinedDelta]] with one durable report version written per
-    * step:
-    *
-    *  - phase 1 folds every pending ORDERS pair with the dimension
-    *    pinned at ITS watermark `wmI`;
-    *  - phase 2 folds every pending INVENTORIES pair with orders
-    *    pinned at the version phase 1 ended on.
-    *
-    * Phase composition is exact by telescoping: phase 1 accumulates
-    * `report(O_cur ⋈ I_wm) ⊖ report(O_wm ⋈ I_wm)`, phase 2 adds
-    * `report(O_cur ⋈ I_cur) ⊖ report(O_cur ⋈ I_wm)` — the middle
-    * terms cancel, leaving exactly the recompute delta, without
-    * needing any cross-store ordering of the two histories (version
-    * names are comparable only within one store; a two-source
-    * maintenance loop cannot assume a global clock). Each phase's
-    * arms are pruned to its own side's changed products.
-    *
-    * FRESH-CONSUMER BOOTSTRAP (q172's fix, two-store form): an empty
-    * report on stores whose oldest retained versions BOTH carry rows
-    * first materializes its base as the joined report of those two
-    * versions, stamped with the pair — on retention-vacuumed stores
-    * the walks can no longer start from empty CreateTable versions.
-    * When EITHER oldest version is empty the joined base is empty by
-    * inner-join algebra and the walks alone are correct, so the
-    * bounded isEmpty reads gate the materialization precisely.
-    *
-    * Returns (orders steps, dimension steps) — (0, 0) on a restart
-    * with nothing new (idempotence, judged in-query by q177).
-    */
-  private[graft] def resumeJoinedMaintenance(
-      ordersSt: graft.state.StateTable, invSt: graft.state.StateTable,
-      reportSt: graft.state.StateTable): (Int, Int) = {
-    val hO = ordersSt.history()
-    val hI = invSt.history()
-    require(hO.nonEmpty && hI.nonEmpty,
-      "q177: a store has no versions to fold")
-    val wmOpt = joinedWatermarksOpt(reportSt)
-    if (wmOpt.isEmpty && !ordersSt.readVersion(hO.head).isEmpty &&
-        !invSt.readVersion(hI.head).isEmpty)
-      reportSt.overwrite(joinedCategoryReport(joinedView(
-          ordersSt.readVersion(hO.head), invSt.readVersion(hI.head)))
-        .withColumn("as_of", lit(hO.head))
-        .withColumn("as_of_dim", lit(hI.head)))
-    val (wmO, wmI) = wmOpt.getOrElse((hO.head, hI.head))
-    val idxO = hO.indexOf(wmO)
-    val idxI = hI.indexOf(wmI)
-    require(idxO >= 0 && idxI >= 0,
-      s"q177: watermark pair ($wmO, $wmI) not in the stores' histories — " +
-        "a store was vacuumed past the report's resume point")
-    def base() = reportSt.current().get.drop("as_of", "as_of_dim")
-    val oPairs = hO.drop(idxO).sliding(2).filter(_.size == 2).toSeq
-    oPairs.foreach { case Seq(from, to) =>
-      // unpinned for the same reason as [[resumeReportMaintenance]]:
-      // the durable write truncates lineage, and dropping the eager
-      // pin drops one sequential job per fold
-      val affected = ordersSt.diff(from, to).select(col("product_id")).distinct()
-      val dim = invSt.readVersion(wmI)
-      reportSt.overwrite(foldJoinedDelta(base(),
-          ordersSt.readVersion(from), ordersSt.readVersion(to),
-          dim, dim, affected)
-        .withColumn("as_of", lit(to)).withColumn("as_of_dim", lit(wmI)))
-    }
-    val oCur = hO.last
-    val iPairs = hI.drop(idxI).sliding(2).filter(_.size == 2).toSeq
-    iPairs.foreach { case Seq(from, to) =>
-      val affected = invSt.diff(from, to).select(col("product_id")).distinct()
-      val oFrame = ordersSt.readVersion(oCur)
-      reportSt.overwrite(foldJoinedDelta(base(), oFrame, oFrame,
-          invSt.readVersion(from), invSt.readVersion(to), affected)
-        .withColumn("as_of", lit(oCur)).withColumn("as_of_dim", lit(to)))
-    }
-    (oPairs.size, iPairs.size)
-  }
-
   /** q177's durable state plus the lifecycle evidence: per-cycle
     * (orders, dim) fold counts and the per-store retention accounting.
     */
   private[graft] final case class DurableJoinFlow(
       ordersRoot: String, invRoot: String, reportRoot: String,
-      steps1: (Int, Int), steps2: (Int, Int),
+      steps1: Seq[Int], steps2: Seq[Int],
       oReclaimed: Int, iReclaimed: Int)
 
   /** q177's construction: the reference flow on BOTH stores (orders
@@ -2760,12 +2614,14 @@ object IngestQueries {
       freshSyncedStore(s, dir, "graft_q177_i_state", "q177",
         graft.core.Schemas.inventories, graft.core.Schemas.inventoriesKey))
     val reportRoot = graft.core.Staging.invocationDir("graft_q177_report", dir)
-    def resume(): (Int, Int) = {
+    def report() =
+      new DurableReport(reportStoreHandle(s, reportRoot, joinedShape), joinedShape)
+    def resume(): Seq[Int] = {
       val o = new graft.state.StateTable(s, ordersSt.root,
         graft.core.Schemas.ordersKey)
       val i = new graft.state.StateTable(s, invSt.root,
         graft.core.Schemas.inventoriesKey)
-      resumeJoinedMaintenance(o, i, joinedReportHandle(s, reportRoot))
+      maintain(Seq(o, i), report())
     }
     // cycle 1: first loads on both stores (disjoint roots — the
     // single-writer-per-store guarantee holds; overlapped per §2.6),
@@ -2781,7 +2637,7 @@ object IngestQueries {
       invSt.upsert(Ingest.readInventoriesCsv(s, iMv))): Unit
     val steps2 = resume()
     // retention: each store vacuums bounded by ITS durable watermark
-    val (wmO, wmI) = joinedWatermarksOpt(joinedReportHandle(s, reportRoot)).get
+    val Seq(wmO, wmI) = report().watermarks().get
     val oReclaimed = ordersSt.vacuumBefore(wmO).size
     val iReclaimed = invSt.vacuumBefore(wmI).size
     DurableJoinFlow(ordersSt.root, invSt.root, reportRoot,
@@ -2796,7 +2652,7 @@ object IngestQueries {
     * here: the report table stamps (`as_of`, `as_of_dim`), a restarted
     * process recovers the pair off the durable rows and absorbs each
     * feed's pending versions in telescoping phases
-    * ([[resumeJoinedMaintenance]] — no cross-store version ordering
+    * ([[maintain]] — no cross-store version ordering
     * assumed, because none exists), retention runs PER STORE bounded
     * by that store's watermark component, and a NEW consumer joining
     * the already-vacuumed stores bootstraps its base from both current
@@ -2840,34 +2696,35 @@ object IngestQueries {
         graft.core.Schemas.ordersKey)
       val inv = new graft.state.StateTable(s, flow.invRoot,
         graft.core.Schemas.inventoriesKey)
-      val rep = joinedReportHandle(s, flow.reportRoot)
+      val rep = new DurableReport(
+        reportStoreHandle(s, flow.reportRoot, joinedShape), joinedShape)
       // post-reclaim restart (a fresh handle applies ZERO steps on
       // both feeds — idempotence judged, q171's convention) and the
       // newcomer onboarding (a NEW joined consumer bootstraps from
       // both current versions): disjoint report roots over read-only
       // stores — overlapped (guide §2.6)
       val bRoot = graft.core.Staging.invocationDir("graft_q177_rep_b", dir)
-      val repB = joinedReportHandle(s, bRoot)
+      val repB = new DurableReport(
+        reportStoreHandle(s, bRoot, joinedShape), joinedShape)
       val (restart, bSteps) = graft.core.Par.both(
-        resumeJoinedMaintenance(orders, inv, rep),
-        resumeJoinedMaintenance(orders, inv, repB))
-      val a = rep.current().get.drop("as_of", "as_of_dim")
-      val b = repB.current().get.drop("as_of", "as_of_dim")
+        maintain(Seq(orders, inv), rep), maintain(Seq(orders, inv), repB))
+      val a = rep.report()
+      val b = repB.report()
       val bEquiv = multisetEquivDiff(a, b, "category")
         .withColumnRenamed("equiv_diff", "b_equiv_diff")
-      val reEquiv = multisetEquivDiff(a, joinedCategoryReport(joinedView(
-          orders.current().get, inv.current().get)), "category")
+      val reEquiv = multisetEquivDiff(a, joinedShape.report(
+          orders.current().get, inv.current().get), "category")
         .withColumnRenamed("equiv_diff", "recompute_equiv_diff")
       a.withColumn("n_order_steps",
-          lit((flow.steps1._1 + flow.steps2._1).toLong))
+          lit((flow.steps1(0) + flow.steps2(0)).toLong))
         .withColumn("n_dim_steps",
-          lit((flow.steps1._2 + flow.steps2._2).toLong))
+          lit((flow.steps1(1) + flow.steps2(1)).toLong))
         .withColumn("o_reclaimed", lit(flow.oReclaimed.toLong))
         .withColumn("i_reclaimed", lit(flow.iReclaimed.toLong))
         .withColumn("o_retained", lit(orders.history().size.toLong))
         .withColumn("i_retained", lit(inv.history().size.toLong))
-        .withColumn("restart_steps", lit((restart._1 + restart._2).toLong))
-        .withColumn("bootstrap_steps", lit((bSteps._1 + bSteps._2).toLong))
+        .withColumn("restart_steps", lit(restart.sum.toLong))
+        .withColumn("bootstrap_steps", lit(bSteps.sum.toLong))
         .join(bEquiv, Seq("category"))
         .join(reEquiv, Seq("category"))
         .orderBy(col("category"))
@@ -2915,14 +2772,11 @@ object IngestQueries {
     * processing-time one. One definition for the base snapshot, both
     * delta arms, and the recompute certificate leg.
     */
-  private def monthlyContrib(contents: DataFrame): DataFrame =
-    contents.select(col("product_id"),
+  private def monthlyContrib(slices: Seq[DataFrame]): DataFrame =
+    slices.head.select(col("product_id"),
       year(col("date_time")).as("sale_year"),
       month(col("date_time")).as("sale_month"),
       lit(1L).as("n_rows"), col("quantity").cast("long").as("qty_sum"))
-
-  private[graft] def monthlyReport(contents: DataFrame): DataFrame =
-    monthlyShape.report(contents)
 
   private[graft] val monthlyShape: MaintainedShape =
     MaintainedShape(monthlyContrib,
@@ -2970,7 +2824,7 @@ object IngestQueries {
     val steps = scala.collection.mutable.ArrayBuffer.empty[Int]
     def foldOnce(root: String): Int = {
       val orders = new graft.state.StateTable(s, root, keyCols)
-      val report = reportStoreHandle(s, reportRoot, monthlyShape, "q176")
+      val report = reportStoreHandle(s, reportRoot, monthlyShape)
       resumeReportMaintenance(orders, report, keyCols, monthlyShape)
     }
     // the late batch's STAGING touches only its own side dir — it can
@@ -3000,7 +2854,7 @@ object IngestQueries {
     val (lateStep, lateTouched) = graft.core.Par.both(
       foldOnce(flow.st.root),
       graft.core.Checkpoints.pin(
-        monthlyReport(orders.current().get.join(lateKeys, keyCols, "left_semi"))
+        monthlyShape.report(orders.current().get.join(lateKeys, keyCols, "left_semi"))
           .select(col("product_id"), col("sale_year"), col("sale_month"))))
     steps += lateStep
     MonthlyFlow(flow.st.root, reportRoot, steps.toSeq, lateKeys, lateTouched)
@@ -3051,9 +2905,9 @@ object IngestQueries {
       val keyCols = graft.core.Schemas.ordersKey
       val flow = q176BuildMonthlyFlow(s, dir)
       val orders = new graft.state.StateTable(s, flow.ordersRoot, keyCols)
-      val reportSt = reportStoreHandle(s, flow.reportRoot, monthlyShape, "q176")
+      val reportSt = reportStoreHandle(s, flow.reportRoot, monthlyShape)
       val maintained = reportSt.current().get.drop("as_of")
-      val recompute = monthlyReport(orders.current().get)
+      val recompute = monthlyShape.report(orders.current().get)
       val equiv = multisetEquivDiff(maintained, recompute, "product_id")
       maintained
         .withColumn("n_steps", lit(flow.foldSteps.sum.toLong))

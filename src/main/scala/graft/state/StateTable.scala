@@ -129,9 +129,7 @@ final class StateTable(
     * trace; failed writes here are simply never pointed at).
     */
   def vacuum(): Unit = currentVersion.foreach { keep =>
-    listDir(rootPath)
-      .filter(p => p.getFileName.toString.startsWith("v-") && p.getFileName.toString != keep)
-      .foreach(deleteRecursively)
+    history().filter(_ != keep).foreach(reclaim)
   }
 
   /** Retention-bounded vacuum: drop retained versions STRICTLY OLDER
@@ -148,8 +146,15 @@ final class StateTable(
   def vacuumBefore(watermark: String): Seq[String] = {
     val keep = currentVersion.toSet
     val reclaimed = history().filter(v => v < watermark && !keep.contains(v))
-    reclaimed.foreach(v => deleteRecursively(rootPath.resolve(v)))
+    reclaimed.foreach(reclaim)
     reclaimed
+  }
+
+  /** Delete one version dir and its schema-cache entry. */
+  private def reclaim(version: String): Unit = {
+    val dir = rootPath.resolve(version)
+    deleteRecursively(dir)
+    StateTable.versionSchemas.remove(dir.toString): Unit
   }
 
   /** Upsert a batch. `orderCol` names a column of `batch` that is
@@ -351,10 +356,11 @@ object StateTable {
     * absolute path at the companion, not per handle. Metadata only:
     * row data is re-read from parquet on every action, and resume
     * state (watermarks, report rows) always comes off the durable rows
-    * themselves. Bounded: one StructType per version written this
-    * process; vacuumed versions' entries are inert.
+    * themselves. One entry per retained version: [[vacuum]] and
+    * [[vacuumBefore]] evict the entries of the versions they reclaim
+    * (dirs deleted by other means keep theirs).
     */
-  private val versionSchemas =
+  private[state] val versionSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   /** Seed the cache from the writer side (see [[StateTable.overwrite]]):

@@ -281,8 +281,8 @@ class IngestCertSpec extends AnyFunSuite {
     // ... and is non-vacuous in the report values: no group vanished
     // (key-loss guard; deletes don't exist here) and cents moved on a
     // surviving product (the update leg reached the aggregate)
-    val r2 = IngestQueries.productReport(st.readVersion(h(1)))
-    val r3 = IngestQueries.productReport(st.readVersion(h(2)))
+    val r2 = IngestQueries.productShape.report(st.readVersion(h(1)))
+    val r3 = IngestQueries.productShape.report(st.readVersion(h(2)))
     assert(r3.count() >= r2.count(), "report groups shrank without deletes")
     val moved = r3.join(r2.select(col("product_id"),
         col("amount_cents").as("_pre")), Seq("product_id"))
@@ -294,13 +294,12 @@ class IngestCertSpec extends AnyFunSuite {
 
   test("q164 maintenance absorbs deletes, including whole-group retraction") {
     // the judged flow produces only inserts and LWW updates, so the
-    // delete arm of maintainProductReport (the doc's "absorbs deletes"
+    // delete arm of the product-report fold (the doc's "absorbs deletes"
     // claim) is pinned here against a hand-built version pair: product
     // 'a' keeps one of two rows partially-deleted, 'b' is updated,
     // 'c' is deleted ENTIRELY (its zero shell must be filtered, not
     // emitted as a 0-row group), 'd' is inserted
     import spark.implicits._
-    val keyCols = Seq("order_id", "product_id")
     val before = Seq(
       ("o1", "a", 10.00), ("o2", "a", 20.00),
       ("o3", "b", 5.00),
@@ -315,9 +314,10 @@ class IngestCertSpec extends AnyFunSuite {
       ("o2", "a"), ("o3", "b"), ("o4", "c"), ("o5", "c"), ("o6", "d")
     ).toDF("order_id", "product_id")
 
-    val maintained = IngestQueries.maintainProductReport(
-      before, after, changedKeys, keyCols)
-    val recomputed = IngestQueries.productReport(after)
+    val shape = IngestQueries.productShape
+    val maintained = shape.fold(shape.report(before), Seq(before), Seq(after),
+      changedKeys)
+    val recomputed = shape.report(after)
     assertMultisetEqual(maintained, recomputed,
       "maintained report diverged from the recompute under deletes")
     assert(maintained.filter(col("product_id") === "c").limit(1).count() == 0L,
@@ -325,8 +325,8 @@ class IngestCertSpec extends AnyFunSuite {
     assert(maintained.count() == 3L, "expected exactly groups a, b, d")
   }
 
-  test("upsert transitions satisfy applyReportDelta's CDC multiset precondition") {
-    // applyReportDelta's correctness rests on the documented
+  test("upsert transitions satisfy the report fold's CDC multiset precondition") {
+    // MaintainedShape.fold's correctness rests on the documented
     // precondition: a key ABSENT from the key-level CDC feed has an
     // UNCHANGED row multiset across the transition (StateTable.diff
     // compares only the latest row per key, so a transition that added
@@ -347,7 +347,7 @@ class IngestCertSpec extends AnyFunSuite {
       .filter(col("n2") =!= col("n3"))
     assert(drifted.limit(1).count() == 0L,
       "upsert changed an existing key's row multiplicity — the " +
-        "key-level CDC feed would miss it and applyReportDelta's " +
+        "key-level CDC feed would miss it and the report fold's " +
         "documented precondition is broken")
     // 2. every key whose multiplicity DID change (0 → n inserts, the
     //    only kind upsert can produce) is covered by the CDC feed
@@ -383,7 +383,7 @@ class IngestCertSpec extends AnyFunSuite {
     // store row-for-row (the judged certificate's property, re-checked
     // here where the step handles are in scope)
     assertMultisetEqual(m.report,
-      IngestQueries.productReport(m.st.current().get),
+      IngestQueries.productShape.report(m.st.current().get),
       "maintained report diverged from the drained-store recompute")
   }
 
@@ -516,6 +516,7 @@ class IngestCertSpec extends AnyFunSuite {
     // X to runner-up 'b' while group Y's carried row is never touched
     import spark.implicits._
     val keyCols = Seq("order_id", "product_id")
+    val shape = IngestQueries.categoryShape
     val before = Seq(
       ("o1", "a", "X", 100.00), ("o2", "b", "X", 60.00),
       ("o3", "c", "Y", 10.00)
@@ -524,18 +525,16 @@ class IngestCertSpec extends AnyFunSuite {
       ("o2", "b", "X", 60.00), ("o3", "c", "Y", 10.00)
     ).toDF("order_id", "product_id", "channel_group", "amount")
     val changedKeys = Seq(("o1", "a")).toDF("order_id", "product_id")
-    val lvl1 = IngestQueries.applyCategoryDelta(
-      IngestQueries.categoryReport(before), before, after, changedKeys, keyCols)
+    val lvl1 = shape.fold(shape.report(before), Seq(before), Seq(after),
+      changedKeys)
     val touched = IngestQueries.touchedGroups(before, after, changedKeys, keyCols)
     // proper-subset pruning the 3-group judged corpus can't show e2e:
     // the retraction touches ONLY X, so Y's argmax is never recomputed
     assert(touched.collect().map(_.getString(0)).toSeq == Seq("X"),
       "expected the retraction to touch exactly group X")
     val top = IngestQueries.maintainTopSellers(
-      IngestQueries.topSellers(IngestQueries.categoryReport(before)),
-      lvl1, touched)
-    assertMultisetEqual(top,
-      IngestQueries.topSellers(IngestQueries.categoryReport(after)),
+      IngestQueries.topSellers(shape.report(before)), lvl1, touched)
+    assertMultisetEqual(top, IngestQueries.topSellers(shape.report(after)),
       "maintained top diverged from the recompute under a leader retraction")
     val x = top.filter(col("channel_group") === "X").collect()
     assert(x.length == 1 && x.head.getAs[String]("top_product_id") == "b",
@@ -611,7 +610,7 @@ class IngestCertSpec extends AnyFunSuite {
     // materialize, not stay empty with a caught-up watermark
     assert(IngestQueries.resumeReportMaintenance(orders, fresh, keyCols) == 0)
     assertMultisetEqual(fresh.current().get.drop("as_of"),
-      IngestQueries.productReport(orders.current().get),
+      IngestQueries.productShape.report(orders.current().get),
       "bootstrap on a vacuumed store missed the oldest version's contents")
     assert(IngestQueries.reportWatermark(fresh, sys.error("must not fall back"))
         == h(2), "bootstrap did not stamp the oldest version as watermark")
@@ -622,7 +621,7 @@ class IngestCertSpec extends AnyFunSuite {
       .withColumn("ord", monotonically_increasing_id()), Some("ord"))
     assert(IngestQueries.resumeReportMaintenance(orders, fresh, keyCols) == 1)
     assertMultisetEqual(fresh.current().get.drop("as_of"),
-      IngestQueries.productReport(orders.current().get),
+      IngestQueries.productShape.report(orders.current().get),
       "post-bootstrap fold diverged from the recompute")
   }
 
@@ -645,7 +644,7 @@ class IngestCertSpec extends AnyFunSuite {
     // the laggard's report table shows its real lifecycle: CreateTable
     // + one durable version per catch-up fold step
     val repB = IngestQueries.reportStoreHandle(spark, flow.bRoot,
-      IngestQueries.categoryShape, "q171-guard")
+      IngestQueries.categoryShape)
     assert(repB.history().size == 3,
       s"laggard report versions ${repB.history().size} != CreateTable + 2 folds")
     // heterogeneous consumers: B's durable schema really is the
@@ -806,9 +805,9 @@ class IngestCertSpec extends AnyFunSuite {
     val sf = TestSpark.testdata("0.001")
     val m = IngestQueries.q175BuildJoinedFlow(spark, sf)
     // two order-side folds (the drains) then one PURE dimension fold
-    assert(m.orderChangedSteps == Seq(true, true, false),
+    assert(m.steps.map(_(0) > 0) == Seq(true, true, false),
       "order-side change flags drifted")
-    assert(m.dimChangedSteps == Seq(false, false, true),
+    assert(m.steps.map(_(1) > 0) == Seq(false, false, true),
       "dimension-side change flags drifted")
     m.affectedSteps.take(2).zipWithIndex.foreach { case (a, i) =>
       assert(a.limit(1).count() == 1L, s"order step $i touched no products")
@@ -868,12 +867,15 @@ class IngestCertSpec extends AnyFunSuite {
       .toDF("product_id", "category"))
     orders.upsert(o(("o1", "p1", 10.00), ("o2", "p2", 20.00),
       ("o3", "p3", 30.00), ("o4", "p3", 5.00)))
-    val fold = new IngestQueries.JoinFoldState
+    val shape = IngestQueries.joinedShape
+    val fold = new IngestQueries.CarriedReport(shape,
+      hs => Seq(hs(0).head, hs(1).last))
+    def step() = IngestQueries.maintain(Seq(orders, inv), fold)
     // step 1: an order-side-only change initializes the fold (the
     // dimension base pins to the inv version current at first
     // observation)
     orders.upsert(o(("o5", "p1", 7.00)))
-    fold.step(orders, inv)
+    val step1 = step()
     // step 2, SIMULTANEOUS: fact side inserts o6 (p2) and LWW-updates
     // o3 (p3); dimension side moves p2 A→B and DELETES p3 — one fold
     // absorbs all four arms of the delta expansion at once
@@ -881,21 +883,20 @@ class IngestCertSpec extends AnyFunSuite {
     inv.overwrite(inv.read().get.filter(col("product_id") =!= "p3")
       .withColumn("category",
         when(col("product_id") === "p2", "B").otherwise(col("category"))))
-    fold.step(orders, inv)
-    assert(fold.orderChangedSteps == Seq(true, true))
-    assert(fold.dimChangedSteps == Seq(false, true))
+    val step2 = step()
+    assert(Seq(step1, step2).map(_(0) > 0) == Seq(true, true))
+    assert(Seq(step1, step2).map(_(1) > 0) == Seq(false, true))
     // the affected set is exactly {p2, p3}: p1 is untouched on both
     // sides and must not be read by either arm
-    assert(fold.affectedSteps.last.collect().map(_.getString(0))
+    assert(fold.stepKeys.last.collect().map(_.getString(0))
         .sorted.toSeq == Seq("p2", "p3"),
       "the simultaneous fold's affected set is not exactly {p2, p3}")
     // the maintained report equals the recompute off both current
     // versions: the ΔO⋈ΔI overlap (o6/o3 under moved/deleted
     // dimension rows) counted exactly once, p3's orders fully
     // retracted, p2's old-category contribution moved wholesale
-    assertMultisetEqual(fold.report,
-      IngestQueries.joinedCategoryReport(IngestQueries.joinedView(
-        orders.current().get, inv.current().get)),
+    assertMultisetEqual(fold.report(),
+      shape.report(orders.current().get, inv.current().get),
       "joined fold diverged from the recompute under simultaneous change")
   }
 
@@ -907,44 +908,46 @@ class IngestCertSpec extends AnyFunSuite {
     // dimension-ONLY change cycle
     val sf = TestSpark.testdata("0.001")
     val flow = IngestQueries.q177BuildDurableJoinFlow(spark, sf)
-    assert(flow.steps1 == ((1, 1)) && flow.steps2 == ((1, 1)),
+    assert(flow.steps1 == Seq(1, 1) && flow.steps2 == Seq(1, 1),
       "per-cycle (orders, dim) fold counts drifted")
     val orders = new graft.state.StateTable(spark, flow.ordersRoot,
       graft.core.Schemas.ordersKey)
     val inv = new graft.state.StateTable(spark, flow.invRoot,
       graft.core.Schemas.inventoriesKey)
-    val rep = IngestQueries.joinedReportHandle(spark, flow.reportRoot)
+    val shape = IngestQueries.joinedShape
+    def durable(root: String) = new IngestQueries.DurableReport(
+      IngestQueries.reportStoreHandle(spark, root, shape), shape)
+    val repSt = IngestQueries.reportStoreHandle(spark, flow.reportRoot, shape)
+    val rep = durable(flow.reportRoot)
     // the durable watermark pair equals the stores' current versions
-    assert(IngestQueries.joinedWatermarksOpt(rep).get ==
-      ((orders.currentVersion.get, inv.currentVersion.get)),
+    assert(rep.watermarks().get ==
+      Seq(orders.currentVersion.get, inv.currentVersion.get),
       "the recovered watermark pair is not the stores' current versions")
     // report lifecycle: CreateTable + exactly 4 durable folds
-    assert(rep.history().size == 5,
-      s"expected CreateTable + 4 folds, got ${rep.history().size}")
+    assert(repSt.history().size == 5,
+      s"expected CreateTable + 4 folds, got ${repSt.history().size}")
     // a newcomer on the VACUUMED pair really takes the materialize
     // path: one bootstrap version stamped with both oldest retained
     // versions, zero walked pairs, value-equal to the veteran
-    val repB = IngestQueries.joinedReportHandle(spark,
-      graft.core.Staging.invocationDir("graft_q177_spec_b", sf))
-    assert(IngestQueries.resumeJoinedMaintenance(orders, inv, repB) == ((0, 0)))
-    assert(repB.history().size == 2,
+    val bRoot = graft.core.Staging.invocationDir("graft_q177_spec_b", sf)
+    val repB = durable(bRoot)
+    assert(IngestQueries.maintain(Seq(orders, inv), repB) == Seq(0, 0))
+    assert(IngestQueries.reportStoreHandle(spark, bRoot, shape).history().size == 2,
       "the newcomer did not materialize a bootstrap version")
-    assert(IngestQueries.joinedWatermarksOpt(repB).get ==
-      ((orders.history().head, inv.history().head)),
+    assert(repB.watermarks().get ==
+      Seq(orders.history().head, inv.history().head),
       "the bootstrap stamps are not the oldest retained versions")
-    assertMultisetEqual(repB.current().get.drop("as_of", "as_of_dim"),
-      rep.current().get.drop("as_of", "as_of_dim"),
+    assertMultisetEqual(repB.report(), rep.report(),
       "newcomer and veteran report rows diverged")
     // a DIMENSION-ONLY cycle resumes as (0, 1) and stays
     // recompute-equal — the judged flow always lands both feeds
     inv.overwrite(inv.read().get.withColumn("category",
       when(col("category") === "RELOCATED", "RELOCATED_2")
         .otherwise(col("category"))))
-    assert(IngestQueries.resumeJoinedMaintenance(orders, inv, rep) == ((0, 1)),
+    assert(IngestQueries.maintain(Seq(orders, inv), rep) == Seq(0, 1),
       "a dimension-only change did not resume as (0, 1)")
-    assertMultisetEqual(rep.current().get.drop("as_of", "as_of_dim"),
-      IngestQueries.joinedCategoryReport(IngestQueries.joinedView(
-        orders.current().get, inv.current().get)),
+    assertMultisetEqual(rep.report(),
+      shape.report(orders.current().get, inv.current().get),
       "the dimension-only fold diverged from the recompute")
   }
 
@@ -968,7 +971,7 @@ class IngestCertSpec extends AnyFunSuite {
         .join(flow.lateKeys, keyCols, "left_semi").limit(1).count() == 0L,
       "a late key already existed pre-late — not a pure insert batch")
     val reportSt = IngestQueries.reportStoreHandle(spark, flow.reportRoot,
-      IngestQueries.monthlyShape, "q176-spec")
+      IngestQueries.monthlyShape)
     val rh = reportSt.history()
     assert(rh.size == 4, "expected CreateTable + three durable folds")
     val bucket = Seq("product_id", "sale_year", "sale_month")

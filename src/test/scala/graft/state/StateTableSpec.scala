@@ -147,4 +147,28 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.vacuumBefore(v3).isEmpty)
     assert(t.current().get.count() == 8)
   }
+
+  test("the version-schema cache holds entries only for retained versions") {
+    // every version write seeds the process-wide schema cache; a store
+    // that upserts and reclaims on every cycle (continuous retention)
+    // must not grow it by one entry per cycle
+    val t = freshTable()
+    def cached = {
+      import scala.jdk.CollectionConverters._
+      StateTable.versionSchemas.keySet.asScala
+        .filter(_.startsWith(t.root + java.io.File.separator)).toSet
+    }
+    def retained = t.history().map(v => java.nio.file.Paths.get(t.root, v).toString).toSet
+    (1 to 20).foreach { i =>
+      t.upsert(ordersBatch(if (i % 2 == 1) "orders_fixture.csv" else "orders_rerun.csv"))
+      t.vacuumBefore(t.currentVersion.get)
+    }
+    assert(t.history().size == 1)
+    assert(cached == retained, s"cache ${cached.size} entries for ${retained.size} retained")
+    // the unbounded vacuum evicts too
+    t.upsert(ordersBatch("orders_rerun.csv"))
+    t.upsert(ordersBatch("orders_fixture.csv"))
+    t.vacuum()
+    assert(t.history().size == 1 && cached == retained)
+  }
 }
